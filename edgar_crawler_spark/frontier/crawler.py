@@ -11,10 +11,11 @@ Per wave:
     wave deep — iterative Spark jobs must cut lineage or plans grow
     unboundedly),
  2. URL-seen: sharded bloom pre-filter + exact anti-join (seen.py),
+    persisted once per wave,
  3. priority + politeness waves (priority.py — salted host buckets),
  4. fetch the front wave via applyInPandas (fetch.py),
- 5. derive per-partition lineage metrics,
- 6. commit {seen, bloom, frontier, pages, metrics} atomically
+ 5. derive per-partition lineage metrics and merge the company dim,
+ 6. commit {frontier, seen, pages, metrics, company_info} atomically
     (state.py). Kill the process anywhere; rerun resumes from the
     last commit with no double-fetch and no missed URL.
 
@@ -117,83 +118,98 @@ class CrawlJob:
         bloom = build_sharded_bloom(
             seen, n_shards=self.bloom_shards, fpp=self.bloom_fpp
         )
-        unseen = filter_unseen(frontier, seen, bloom)
-        # A merged/replayed frontier can consist ENTIRELY of already-seen
-        # urls; without this check run() would loop forever committing
-        # empty waves (frontier non-empty but no fetchable work).
-        if not unseen.head(1):
-            return None
-        waved = assign_waves(unseen, self.n_buckets, self.wave_size)
-        front = waved.filter(F.col("wave") == 0)
+        # persisted: waves, next frontier and commit all read `unseen`,
+        # and each read of an unpersisted one re-runs the bloom probe
+        unseen = filter_unseen(frontier, seen, bloom).persist()
+        fetched = None
+        try:
+            # A merged/replayed frontier can consist ENTIRELY of
+            # already-seen urls; without this check run() would loop
+            # forever committing empty waves (frontier non-empty but no
+            # fetchable work). The count also materializes `unseen`.
+            if unseen.count() == 0:
+                return None
+            waved = assign_waves(unseen, self.n_buckets, self.wave_size)
+            front = waved.filter(F.col("wave") == 0)
 
-        fetched = fetch_wave(
-            front,
-            host_budget_per_sec=self.host_budget_per_sec,
-            n_buckets=self.n_buckets,
-            transport_factory=self.transport_factory,
-            robots=self.robots,
-        ).cache()
+            fetched = fetch_wave(
+                front,
+                host_budget_per_sec=self.host_budget_per_sec,
+                n_buckets=self.n_buckets,
+                transport_factory=self.transport_factory,
+                robots=self.robots,
+            ).cache()
 
-        metrics = (
-            fetched.withColumn("_pid", F.spark_partition_id())
-            .groupBy("wave", "host_bucket")
-            .agg(
-                F.min("_pid").alias("partition_id"),
-                F.count(F.lit(1)).alias("n_urls"),
-                F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
-                F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias(
-                    "n_failed"
-                ),
-                F.sum("attempts").alias("sum_attempts"),
-                F.sum("fetched_bytes").alias("sum_bytes"),
-                F.min("sched_ts").alias("t_first"),
-                F.max("sched_ts").alias("t_last"),
+            metrics = (
+                fetched.withColumn("_pid", F.spark_partition_id())
+                .groupBy("wave", "host_bucket")
+                .agg(
+                    F.min("_pid").alias("partition_id"),
+                    F.count(F.lit(1)).alias("n_urls"),
+                    F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias(
+                        "n_ok"
+                    ),
+                    F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias(
+                        "n_failed"
+                    ),
+                    F.sum("attempts").alias("sum_attempts"),
+                    F.sum("fetched_bytes").alias("sum_bytes"),
+                    F.min("sched_ts").alias("t_first"),
+                    F.max("sched_ts").alias("t_last"),
+                )
+                .withColumn(
+                    "urls_per_sec",
+                    F.col("n_urls")
+                    / F.greatest(F.col("t_last") - F.col("t_first"), F.lit(1e-9)),
+                )
             )
-            .withColumn(
-                "urls_per_sec",
-                F.col("n_urls")
-                / F.greatest(F.col("t_last") - F.col("t_first"), F.lit(1e-9)),
+
+            # lazy company-info dim upsert (download_filings.py:572-646):
+            # only ciks NOT already in the dim are "fetched"; the merged
+            # dim rides the same atomic commit as the rest of the state.
+            dim = self.store.read_any(self.spark, "company_info")
+            next_version = (self.store.latest() or 0) + 1
+            new_dim = merge_company_info(
+                dim, fetched.select("cik"), next_version,
+                self.company_transport_factory,
             )
-        )
 
-        # lazy company-info dim upsert (download_filings.py:572-646):
-        # only ciks NOT already in the dim are "fetched"; the merged
-        # dim rides the same atomic commit as the rest of the state.
-        dim = self.store.read_any(self.spark, "company_info")
-        next_version = (self.store.latest() or 0) + 1
-        new_dim = merge_company_info(
-            dim, fetched.select("cik"), next_version,
-            self.company_transport_factory,
-        )
+            done_urls = fetched.select("url")
+            new_seen = seen.unionByName(done_urls).dropDuplicates(["url"])
+            # next frontier = this round's UNSEEN minus this wave's
+            # fetches: already-seen rows drain out of the frontier here
+            # instead of being carried (and re-bloom-filtered) forever.
+            # Not `wave > 0`: a recomputed assign_waves may break its
+            # row_number ties differently from the fetched wave.
+            new_frontier = unseen.join(done_urls, on="url", how="left_anti")
 
-        done_urls = fetched.select("url")
-        new_seen = seen.unionByName(done_urls).dropDuplicates(["url"])
-        # next frontier = this round's UNSEEN minus this wave's fetches:
-        # already-seen rows drain out of the frontier here instead of
-        # being carried (and re-bloom-filtered) forever.
-        new_frontier = unseen.join(done_urls, on="url", how="left_anti")
-
-        n_ok = fetched.filter(F.col("status") == "ok").count()
-        n_failed = fetched.filter(F.col("status") != "ok").count()
-        version = self.store.commit(
-            {
-                "frontier": new_frontier.select(*FRONTIER_COLS),
-                "seen": new_seen,
-                "pages": fetched,
-                "metrics": metrics,
-                "company_info": new_dim,
-            },
-            summary={
-                "stage": "wave",
-                "n_ok": n_ok,
-                "n_failed": n_failed,
-                "n_buckets": self.n_buckets,
-                "wave_size": self.wave_size,
-                "host_budget_per_sec": self.host_budget_per_sec,
-            },
-        )
-        fetched.unpersist()
-        return n_ok, n_failed, version
+            counts = fetched.agg(
+                F.count_if(F.col("status") == "ok").alias("n_ok"),
+                F.count_if(F.col("status") != "ok").alias("n_failed"),
+            ).first()
+            n_ok, n_failed = int(counts["n_ok"]), int(counts["n_failed"])
+            version = self.store.commit(
+                {
+                    "frontier": new_frontier.select(*FRONTIER_COLS),
+                    "seen": new_seen,
+                    "pages": fetched,
+                    "metrics": metrics,
+                    "company_info": new_dim,
+                },
+                summary={
+                    "stage": "wave",
+                    "n_ok": n_ok,
+                    "n_failed": n_failed,
+                    "n_buckets": self.n_buckets,
+                    "wave_size": self.wave_size,
+                    "host_budget_per_sec": self.host_budget_per_sec,
+                },
+            )
+            return n_ok, n_failed, version
+        finally:
+            unseen.unpersist()
+            if fetched is not None:
+                fetched.unpersist()
 
     # -- full run ------------------------------------------------------
 

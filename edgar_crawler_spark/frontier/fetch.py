@@ -136,6 +136,19 @@ class SimulatedTransport:
         return body.encode("utf-8")
 
 
+def _get(transport, url: str, form_type: str, attempt: int) -> bytes | None:
+    """One GET attempt; None = this attempt failed. A raised OSError
+    (requests/urllib3 connection errors subclass it) is a failed
+    attempt for the retry loop, not a failed task: a task failure
+    makes Spark re-run the whole bucket, re-fetching every url in it
+    and charging politeness twice. Any other exception still fails
+    the task."""
+    try:
+        return transport.get(url, form_type, attempt)
+    except OSError:
+        return None
+
+
 FETCH_EXTRACT_SCHEMA = (
     "url string, cik string, form_type string, filing_date string, "
     "accession string, host_bucket int, wave long, attempts int, "
@@ -202,7 +215,7 @@ def fetch_extract_wave(
                     delay = (anchor + t) - time.monotonic()
                     if delay > 0:
                         time.sleep(delay)
-                body = transport.get(row.url, row.form_type, attempts)
+                body = _get(transport, row.url, row.form_type, attempts)
                 if body is None and attempts <= MAX_RETRIES:
                     bucket.now += BACKOFF_FACTOR * (2 ** (attempts - 1))
             n_items, digest = 0, None
@@ -288,7 +301,7 @@ def fetch_wave(
                     delay = (anchor + t) - time.monotonic()
                     if delay > 0:
                         time.sleep(delay)
-                body = transport.get(row.url, row.form_type, attempts)
+                body = _get(transport, row.url, row.form_type, attempts)
                 if body is None and attempts <= MAX_RETRIES:
                     # reference backoff schedule, charged to the clock
                     bucket.now += BACKOFF_FACTOR * (2 ** (attempts - 1))

@@ -166,6 +166,11 @@ def filter_unseen(
     anti-join. `seen` is broadcast when small; at scale both sides
     hash-partition on the url (Catalyst picks SortMergeJoin and AQE
     handles residual skew — the url key is near-unique so none).
+
+    The maybe-seen flag is computed once per frontier row on each leg
+    and never over `seen`: the ledger is read only by the exact
+    anti-join on the suspect leg. Callers that consume the result more
+    than once should persist it, or every action re-runs the probe.
     """
     if bloom is None:
         return frontier.join(seen.select(url_col), on=url_col, how="left_anti")
@@ -193,6 +198,12 @@ def filter_unseen(
             _FILTER_CACHE[b_key] = sb
         return pd.Series(sb.might_contain_many(urls.astype(str).tolist()))
 
+    # Nondeterministic on purpose: Catalyst infers a deterministic
+    # predicate across the anti-join's `url = url` onto `seen`, which
+    # pushed every ledger row through this Python probe. Constraints
+    # are never derived from nondeterministic expressions, so the probe
+    # stays on the frontier. (The UDF is in fact deterministic.)
+    maybe_seen = maybe_seen.asNondeterministic()
     flagged = frontier.withColumn("_maybe_seen", maybe_seen(F.col(url_col)))
     clear = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     suspect = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")

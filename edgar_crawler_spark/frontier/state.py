@@ -20,11 +20,13 @@ kill/resume test exercises. On a real deployment swap this class for
 `df.writeTo("catalog.db.t")` Iceberg commits; callers don't change.
 
 Tables per snapshot:
-  seen      (url)                          — the URL-seen set
-  bloom     (shard, bitmap)                — its sharded bloom bitmaps
-  frontier  (remaining scheduled rows)     — queue state
-  pages     (FETCH_SCHEMA rows, appended)  — the crawl output
-  metrics   (per-partition lineage rows)   — see crawler.py
+  seen          (url)                          — the URL-seen set
+  frontier      (remaining scheduled rows)     — queue state
+  pages         (FETCH_SCHEMA rows, appended)  — the crawl output
+  metrics       (per-partition lineage rows)   — see crawler.py
+  company_info  (cik-keyed company dim)        — see company.py
+
+The bloom filter is not a table: each wave rebuilds it from `seen`.
 """
 
 from __future__ import annotations
@@ -118,7 +120,7 @@ class SnapshotStore:
     # Superseded-state tables: each commit REPLACES these wholesale, so
     # old copies only serve time travel. Append-log tables (pages,
     # metrics) hold data that exists nowhere else and are never expired.
-    STATE_TABLES = ("frontier", "seen", "bloom", "company_info")
+    STATE_TABLES = ("frontier", "seen", "company_info")
 
     def expire_state(self, keep_last: int = 2) -> list[int]:
         """Iceberg-style snapshot expiry: drop the superseded STATE
@@ -132,7 +134,7 @@ class SnapshotStore:
         are untouched because `_load_state`/`read_any` only ever read
         the newest version carrying a table.
 
-        At 10^10 URLs the seen+bloom state is the dominant storage
+        At 10^10 URLs the seen ledger is the dominant storage
         cost per snapshot; without expiry a W-wave crawl stores W
         copies. Returns the versions whose state was expired."""
         vs = self.versions()

@@ -12,6 +12,7 @@
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -181,6 +182,50 @@ class TestUrlSeen:
         assert got == want
         assert 0 < len(got) < 300
 
+    def test_probe_never_runs_over_seen(self, spark, tmp_path):
+        """Plan audit: the bloom probe (an `ArrowEvalPython` node) runs
+        over frontier rows only. Catalyst must not infer it across the
+        anti-join's `url = url` onto the seen ledger, which would push
+        every seen url through the Python probe on every wave."""
+        frontier_dir, seen_dir = str(tmp_path / "frontier"), str(tmp_path / "seen")
+        _frontier_df(spark, 200, seed=5).write.parquet(frontier_dir)
+        frontier = spark.read.parquet(frontier_dir)
+        frontier.sample(0.5, seed=7).select("url").write.parquet(seen_dir)
+        seen = spark.read.parquet(seen_dir)
+        bloom = build_sharded_bloom(seen, n_shards=4)
+        unseen = filter_unseen(frontier, seen, bloom)
+        unseen.collect()  # audit the final adaptive plan, not the initial one
+        evals = _nodes(unseen._jdf.queryExecution().executedPlan(), "ArrowEvalPython")
+        assert 1 <= len(evals) <= 2
+        for node in evals:
+            scanned = {_scan_path(n) for n in _nodes(node, "Scan")}
+            assert scanned == {os.path.realpath(frontier_dir)}
+
+
+def _children(node) -> list:
+    """Physical-plan children, looking through adaptive wrappers and
+    query stages (which hide their subtree from `children`)."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if node.getClass().getSimpleName().endswith("QueryStageExec"):
+        return [node.plan()]
+    seq = node.children()
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _nodes(root, prefix: str) -> list:
+    out, todo = [], [root]
+    while todo:
+        node = todo.pop()
+        if node.nodeName().startswith(prefix):
+            out.append(node)
+        todo.extend(_children(node))
+    return out
+
+
+def _scan_path(scan) -> str:
+    return scan.relation().location().rootPaths().apply(0).toUri().getPath()
+
 
 class TestOrdering:
     def test_reference_order_matches_oracle(self, spark):
@@ -312,7 +357,9 @@ class TestCrawlEndToEnd:
             wave_size=20,
             transport_factory=lambda: SimulatedTransport(transient_pct=20),
         )
+        spark.catalog.clearCache()
         res = job.run(_frontier_df(spark, n))
+        assert _cache_is_empty(spark)  # every wave unpersisted its caches
         pages = job.pages().cache()
         assert res.n_fetched == n and res.n_failed == 0
         assert pages.count() == n
@@ -425,14 +472,22 @@ class TestCrawlEndToEnd:
         job.store.commit(
             {"frontier": merged, "seen": seen}, summary={"stage": "replay"}
         )
+        spark.catalog.clearCache()
         res = job.run(max_waves=5)  # bounded: must NOT hit the bound
         assert res.waves_run < 5
+        # the last wave took the all-seen early return
+        assert _cache_is_empty(spark)
         pages = job.pages()
         assert pages.count() == 60  # only the 20 new urls fetched
         assert pages.select("url").distinct().count() == 60
         # pure-replay case: run again with zero new work -> 0 waves
         res2 = job.run(max_waves=5)
         assert res2.waves_run == 0 and res2.n_fetched == 0
+        assert _cache_is_empty(spark)
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 class TestCompanyInfoDim:
@@ -541,6 +596,56 @@ class TestFusedCrawl:
             two_stage[r.url] = (len(items), digest)
         assert fused == two_stage
         assert sum(n for n, _ in fused.values()) > 0
+
+
+class TestTransportErrors:
+    @staticmethod
+    def _raising_transport(exc_type):
+        # defined locally so Spark pickles it by value into the workers
+        class Raising(SimulatedTransport):
+            """Raises `exc_type` on the first attempt for every third url."""
+
+            @staticmethod
+            def raises_first(url):
+                return int(url[-10:-4]) % 3 == 0
+
+            def get(self, url, form_type, attempt):
+                if attempt == 1 and self.raises_first(url):
+                    raise exc_type(f"connection reset: {url}")
+                return super().get(url, form_type, attempt)
+
+        return Raising
+
+    def test_connection_error_is_a_retried_attempt(self, spark):
+        """A transport that raises (requests' ConnectionError is an
+        OSError) costs one attempt inside the retry loop, not the
+        bucket task: every url still ends `ok` exactly once."""
+        from edgar_crawler_spark.frontier.fetch import fetch_extract_wave, fetch_wave
+
+        waved = assign_waves(_frontier_df(spark, 60, seed=11), 4, wave_size=1000)
+        cls = self._raising_transport(ConnectionError)
+        urls = [r.url for r in waved.select("url").collect()]
+        want = {u: 2 if cls.raises_first(u) else 1 for u in urls}
+        assert 0 < sum(a == 2 for a in want.values()) < len(urls)
+        for fetch in (fetch_wave, fetch_extract_wave):
+            rows = fetch(
+                waved, host_budget_per_sec=1e9, n_buckets=4,
+                transport_factory=lambda: cls(transient_pct=0),
+            ).select("url", "status", "attempts").collect()
+            assert sorted(r.url for r in rows) == sorted(urls)
+            assert all(r.status == "ok" for r in rows)
+            assert {r.url: r.attempts for r in rows} == want
+
+    def test_other_exceptions_fail_loudly(self, spark):
+        from edgar_crawler_spark.frontier.fetch import fetch_wave
+
+        waved = assign_waves(_frontier_df(spark, 30, seed=11), 2, wave_size=1000)
+        cls = self._raising_transport(ValueError)
+        with pytest.raises(Exception, match="ValueError"):
+            fetch_wave(
+                waved, host_budget_per_sec=1e9, n_buckets=2,
+                transport_factory=lambda: cls(transient_pct=0),
+            ).collect()
 
 
 def _rerun_reference(spark, tmp_path, n):
