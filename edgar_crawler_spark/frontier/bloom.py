@@ -20,6 +20,13 @@ scheme: pos_i = (h1 + i*h2) mod m.
 Guarantee: NO false negatives ever (a seen URL is always flagged), and
 false positives only cost a wasted row in the exact anti-join that
 follows (seen.py) — correctness never depends on the bloom.
+
+Lifecycle: the filter is add-only, like the seen set it mirrors. A
+crawl job builds it once from the ledger, sized for the ledger plus its
+frontier, then after each wave's commit keeps a copy with the fetched
+URLs ORed in (`ShardedBloom.union`). It lives in the job's memory only;
+the job rebuilds it whenever the latest snapshot is not one it
+committed itself (crawler.py).
 """
 
 from __future__ import annotations
@@ -194,6 +201,22 @@ class ShardedBloom:
             idx = np.nonzero(sh == s)[0]
             out[idx] = bf.might_contain_batch(h1[idx], h2[idx])
         return out
+
+    def union(self, keys) -> "ShardedBloom":
+        """A copy with `keys` added; `self` is left untouched (a probe
+        may still hold it). Every shard a key hashes to must be present,
+        as in the filters `build_sharded_bloom` returns."""
+        shards = {
+            s: BloomFilter(bf.m, bf.k, bf.bits.copy())
+            for s, bf in self.shards.items()
+        }
+        keys = list(keys)
+        if keys:
+            sh = shard_of_many(keys, self.n_shards)
+            arr = np.asarray(keys, dtype=object)
+            for s in np.unique(sh):
+                shards[int(s)].add_many(arr[sh == s].tolist())
+        return ShardedBloom(self.n_shards, shards)
 
     def to_rows(self) -> list[tuple[int, bytes]]:
         """(shard, bitmap) rows — the persisted checkpoint form."""

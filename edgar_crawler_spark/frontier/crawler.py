@@ -11,13 +11,17 @@ Per wave:
     wave deep — iterative Spark jobs must cut lineage or plans grow
     unboundedly),
  2. URL-seen: sharded bloom pre-filter + exact anti-join (seen.py),
-    persisted once per wave,
+    persisted once per wave. The bloom is the one this job grew through
+    the last snapshot when it committed that snapshot itself; otherwise
+    it is built from `seen`, sized for `seen` plus the frontier,
  3. priority + politeness waves (priority.py — salted host buckets),
  4. fetch the front wave via applyInPandas (fetch.py),
  5. derive per-partition lineage metrics and merge the company dim,
- 6. commit {frontier, seen, pages, metrics, company_info} atomically
-    (state.py). Kill the process anywhere; rerun resumes from the
-    last commit with no double-fetch and no missed URL.
+ 6. commit {frontier, pages, metrics, company_info} and the fetched
+    URLs as a `seen` delta atomically (state.py), then keep a copy of
+    the bloom with those URLs ORed in for the next wave. Kill the
+    process anywhere; rerun resumes from the last commit with no
+    double-fetch and no missed URL.
 
 Failed-after-retries URLs are committed to `seen` with status=failed
 in the pages table (so a bounded run terminates); the reference's
@@ -26,12 +30,14 @@ in the pages table (so a bounded run terminates); the reference's
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .bloom import ShardedBloom
 from .canon import canonicalize_url
 from .company import enrich_pages, merge_company_info
 from .fetch import RobotsPolicy, SimulatedTransport, fetch_wave
@@ -79,6 +85,11 @@ class CrawlJob:
         self.transport_factory = transport_factory
         self.robots = robots
         self.company_transport_factory = company_transport_factory
+        # the bloom mirroring `seen` at the version this job last
+        # committed, and how many more keys it was sized for
+        self._bloom: ShardedBloom | None = None
+        self._bloom_version: int | None = None
+        self._bloom_room = 0
 
     # -- state ---------------------------------------------------------
 
@@ -95,13 +106,37 @@ class CrawlJob:
             summary={"stage": "seed"},
         )
 
-    def _load_state(self) -> tuple[DataFrame, DataFrame] | None:
+    def _load_state(self) -> tuple[int, DataFrame, DataFrame] | None:
         v = self.store.latest()
         if v is None:
             return None
         frontier = self.store.read(self.spark, "frontier", v)
         seen = self.store.read(self.spark, "seen", v)
-        return frontier, seen
+        return v, frontier, seen
+
+    def _bloom_for(
+        self, version: int, frontier: DataFrame, seen: DataFrame
+    ) -> ShardedBloom:
+        """The bloom this job grew through `version` if one of its waves
+        committed it; else a fresh build from `seen`. The build is sized
+        for `seen` plus the whole frontier: every url a later wave adds
+        comes from that frontier, and a commit that grows the frontier
+        or removes seen urls (`requeue_failed`, a stream merge, another
+        process) is not a wave of this job, so it forces a rebuild and a
+        stale filter is never read."""
+        if self._bloom is not None and self._bloom_version == version:
+            return self._bloom
+        n_seen = seen.count()
+        per_shard = max(
+            64, math.ceil((n_seen + frontier.count()) / self.bloom_shards)
+        )
+        self._bloom = build_sharded_bloom(
+            seen, n_shards=self.bloom_shards,
+            expected_per_shard=per_shard, fpp=self.bloom_fpp,
+        )
+        self._bloom_version = version
+        self._bloom_room = per_shard * self.bloom_shards - n_seen
+        return self._bloom
 
     # -- one wave ------------------------------------------------------
 
@@ -111,13 +146,11 @@ class CrawlJob:
         state = self._load_state()
         if state is None:
             raise RuntimeError("no snapshot; call seed(frontier) first")
-        frontier, seen = state
+        v, frontier, seen = state
         if not frontier.head(1):
             return None
 
-        bloom = build_sharded_bloom(
-            seen, n_shards=self.bloom_shards, fpp=self.bloom_fpp
-        )
+        bloom = self._bloom_for(v, frontier, seen)
         # persisted: waves, next frontier and commit all read `unseen`,
         # and each read of an unpersisted one re-runs the bloom probe
         unseen = filter_unseen(frontier, seen, bloom).persist()
@@ -175,7 +208,6 @@ class CrawlJob:
             )
 
             done_urls = fetched.select("url")
-            new_seen = seen.unionByName(done_urls).dropDuplicates(["url"])
             # next frontier = this round's UNSEEN minus this wave's
             # fetches: already-seen rows drain out of the frontier here
             # instead of being carried (and re-bloom-filtered) forever.
@@ -183,15 +215,17 @@ class CrawlJob:
             # row_number ties differently from the fetched wave.
             new_frontier = unseen.join(done_urls, on="url", how="left_anti")
 
-            counts = fetched.agg(
+            # the one action over the cached `fetched`: it materializes
+            # the cache before the concurrent commit writes read it
+            done = fetched.agg(
                 F.count_if(F.col("status") == "ok").alias("n_ok"),
                 F.count_if(F.col("status") != "ok").alias("n_failed"),
+                F.collect_list("url").alias("urls"),
             ).first()
-            n_ok, n_failed = int(counts["n_ok"]), int(counts["n_failed"])
+            n_ok, n_failed = int(done["n_ok"]), int(done["n_failed"])
             version = self.store.commit(
                 {
                     "frontier": new_frontier.select(*FRONTIER_COLS),
-                    "seen": new_seen,
                     "pages": fetched,
                     "metrics": metrics,
                     "company_info": new_dim,
@@ -204,7 +238,17 @@ class CrawlJob:
                     "wave_size": self.wave_size,
                     "host_budget_per_sec": self.host_budget_per_sec,
                 },
+                deltas={"seen": done_urls.coalesce(1)},
             )
+            # every fetched url was unseen, so the ledger grew by
+            # exactly these; past the room the fpp would degrade, so the
+            # next wave rebuilds instead (a guard: the frontier it was
+            # sized for bounds them)
+            self._bloom = None
+            if len(done["urls"]) <= self._bloom_room:
+                self._bloom = bloom.union(done["urls"])  # `bloom` stays as probed
+                self._bloom_version = version
+                self._bloom_room -= len(done["urls"])
             return n_ok, n_failed, version
         finally:
             unseen.unpersist()

@@ -9,6 +9,12 @@ bloom clears skip the join entirely. At 10^10 seen URLs with a fresh
 frontier that is mostly-unseen, the anti-join input shrinks by ~99%
 (the bloom's true-positive + fpp fraction), which is the difference
 between shuffling 10^10 rows and shuffling 10^8.
+
+Lifecycle: `build_sharded_bloom` runs over the whole ledger once per
+crawl job, and again only when the latest snapshot is not one that job
+committed or the filter has no room left for a wave's URLs; between
+builds the job keeps the filter add-only (bloom.py).
+`filter_unseen` never changes the filter it is given.
 """
 
 from __future__ import annotations
@@ -38,7 +44,8 @@ def build_sharded_bloom(
     """Build the sharded bloom distributed: every input partition folds
     its rows into per-shard bitmaps (map-side), then bitmaps OR-merge
     per shard in a tiny shuffle of `n_shards × partitions` rows. The
-    driver only ever sees finished bitmaps.
+    driver only ever sees finished bitmaps. Every shard is present in
+    the result, empty ones included, so keys can be added to any.
     """
     if expected_per_shard is None:
         n = seen.count()
@@ -88,6 +95,8 @@ def build_sharded_bloom(
         int(r["shard"]): BloomFilter.from_bytes(bytes(r["bitmap"]))
         for r in finished.collect()
     }
+    for s in range(ns):
+        shards.setdefault(s, BloomFilter.empty(exp, p))
     return ShardedBloom(n_shards=ns, shards=shards)
 
 

@@ -18,6 +18,8 @@ dangling uncommitted directory that the next writer ignores/overwrites
 — exactly Iceberg's snapshot isolation, and the property the
 kill/resume test exercises. On a real deployment swap this class for
 `df.writeTo("catalog.db.t")` Iceberg commits; callers don't change.
+A commit writes its tables concurrently (one Spark job each), then
+renames the manifest.
 
 Tables per snapshot:
   seen          (url)                          — the URL-seen set
@@ -26,7 +28,22 @@ Tables per snapshot:
   metrics       (per-partition lineage rows)   — see crawler.py
   company_info  (cik-keyed company dim)        — see company.py
 
-The bloom filter is not a table: each wave rebuilds it from `seen`.
+`seen` is a delta log. A wave commits only the URLs it fetched, as a
+delta on the previous version; `read` returns the logical table (base
+plus every delta since) as one multi-path parquet scan. The store
+compacts by itself: once the deltas since the base hold as many bytes
+as the base, or the chain would pass Spark's parallel-listing
+threshold, the next append writes one full copy instead. Compactions
+at least double the base, so each row is rewritten O(1) times. A commit
+that passes a full table (seed, requeue, a streaming merge) writes a
+new base.
+
+The bloom filter is not a table: a crawl job keeps it in memory and
+grows it wave by wave (crawler.py).
+
+The manifest records, at no Spark cost, the bytes each table wrote
+(listed from the filesystem after the writes) and which tables are
+deltas on which version.
 """
 
 from __future__ import annotations
@@ -35,9 +52,23 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+
+# InMemoryFileIndex lists more root paths than this with a Spark job
+LISTING_THRESHOLD_CONF = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _dir_bytes(path: str) -> int:
+    """Bytes of a table directory's data files (not _SUCCESS or .crc)."""
+    return sum(
+        e.stat().st_size
+        for e in os.scandir(path)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    )
 
 
 @dataclass
@@ -66,28 +97,83 @@ class SnapshotStore:
         with open(os.path.join(self._vdir(version), "MANIFEST.json")) as f:
             return json.load(f)
 
+    def chain(self, table: str, version: int) -> list[int]:
+        """Versions whose `table` directories make up the logical table
+        at `version`: its base first, then each delta in order."""
+        out = [version]
+        while True:
+            mpath = os.path.join(self._vdir(out[-1]), "MANIFEST.json")
+            if not os.path.exists(mpath):
+                break
+            parent = self.manifest(out[-1]).get("deltas", {}).get(table)
+            if parent is None:
+                break
+            out.append(parent)
+        return out[::-1]
+
+    def _appends(self, spark: SparkSession, table: str, parent: int) -> bool:
+        """Whether a delta on `parent`'s `table` may extend its chain
+        rather than compact it into a full copy."""
+        chain = self.chain(table, parent)
+        sizes = [_dir_bytes(os.path.join(self._vdir(v), table)) for v in chain]
+        limit = int(spark.conf.get(LISTING_THRESHOLD_CONF))
+        return sum(sizes[1:]) < sizes[0] and len(chain) < limit
+
     def commit(
         self,
         tables: dict[str, DataFrame],
         summary: dict | None = None,
+        deltas: dict[str, DataFrame] | None = None,
     ) -> int:
         """Write all tables of the next snapshot, then commit by
         atomically renaming the manifest into place. Anything that
-        dies before the rename is invisible to readers."""
-        version = (self.latest() or 0) + 1
+        dies before the rename is invisible to readers.
+
+        `deltas` maps a table to rows appended to its logical content
+        at the latest version. The rows must not already be in it: no
+        dedup runs. The store writes the rows alone, as a delta, or
+        compacts (see the module docstring); if the latest version has
+        no such table the rows are the whole table."""
+        parent = self.latest()
+        version = (parent or 0) + 1
         vdir = self._vdir(version)
         if os.path.isdir(vdir):  # uncommitted debris from a crash
             shutil.rmtree(vdir)
         os.makedirs(vdir, exist_ok=True)
-        counts = {}
-        for name, df in tables.items():
-            path = os.path.join(vdir, name)
-            df.write.mode("overwrite").parquet(path)
-            counts[name] = None  # filled lazily by readers; avoid extra jobs
+
+        writes = dict(tables)
+        delta_of: dict[str, int] = {}
+        for name, df in (deltas or {}).items():
+            carried = parent is not None and os.path.isdir(
+                os.path.join(self._vdir(parent), name)
+            )
+            if carried and self._appends(df.sparkSession, name, parent):
+                delta_of[name] = parent
+            elif carried:
+                df = self.read(df.sparkSession, name, parent).unionByName(df)
+            writes[name] = df
+
+        def write(name: str, df: DataFrame) -> None:
+            df.write.mode("overwrite").parquet(os.path.join(vdir, name))
+
+        # concurrent: one small write job alone leaves most cores idle.
+        # The wrapper carries the caller's job group and description
+        # into each thread. Leaving the pool waits for every write;
+        # then the first failed one, in table order, raises.
+        with ThreadPoolExecutor(max_workers=max(1, len(writes))) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(df.sparkSession)(write), name, df)
+                for name, df in writes.items()
+            ]
+        for fut in futures:
+            fut.result()
+
         manifest = {
             "version": version,
             "committed_at": time.time(),
-            "tables": sorted(tables.keys()),
+            "tables": sorted(writes),
+            "deltas": delta_of,
+            "bytes": {n: _dir_bytes(os.path.join(vdir, n)) for n in sorted(writes)},
             "summary": summary or {},
         }
         tmp = os.path.join(vdir, ".MANIFEST.json.tmp")
@@ -99,13 +185,15 @@ class SnapshotStore:
     def read(
         self, spark: SparkSession, table: str, version: int | None = None
     ) -> DataFrame | None:
+        """The logical `table` at `version` (default latest): one scan
+        over its base and deltas, or None if any of them is missing."""
         v = version if version is not None else self.latest()
         if v is None:
             return None
-        path = os.path.join(self._vdir(v), table)
-        if not os.path.isdir(path):
+        paths = [os.path.join(self._vdir(c), table) for c in self.chain(table, v)]
+        if not all(os.path.isdir(p) for p in paths):
             return None
-        return spark.read.parquet(path)
+        return spark.read.parquet(*paths)
 
     def read_any(self, spark: SparkSession, table: str) -> DataFrame | None:
         """Read `table` from the NEWEST committed version that carries
@@ -117,14 +205,16 @@ class SnapshotStore:
                 return df
         return None
 
-    # Superseded-state tables: each commit REPLACES these wholesale, so
-    # old copies only serve time travel. Append-log tables (pages,
-    # metrics) hold data that exists nowhere else and are never expired.
+    # Superseded-state tables: each commit REPLACES these wholesale (or,
+    # for seen, extends them by a delta), so old copies only serve time
+    # travel. Append-log tables (pages, metrics) hold data that exists
+    # nowhere else and are never expired.
     STATE_TABLES = ("frontier", "seen", "company_info")
 
     def expire_state(self, keep_last: int = 2) -> list[int]:
         """Iceberg-style snapshot expiry: drop the superseded STATE
-        tables from all but the newest `keep_last` committed versions.
+        tables from all but the newest `keep_last` committed versions
+        and the older versions whose deltas those still read.
 
         The append-only tables (pages, metrics) survive in every
         version — they are the crawl's output log, unioned by
@@ -150,9 +240,11 @@ class SnapshotStore:
                 v for v in vs
                 if os.path.isdir(os.path.join(self._vdir(v), t))
             ]
-            for v in carriers[:-keep_last]:
-                shutil.rmtree(os.path.join(self._vdir(v), t))
-                expired.add(v)
+            needed = {c for v in carriers[-keep_last:] for c in self.chain(t, v)}
+            for v in carriers:
+                if v not in needed:
+                    shutil.rmtree(os.path.join(self._vdir(v), t))
+                    expired.add(v)
         return sorted(expired)
 
 

@@ -12,6 +12,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import random
 
@@ -754,6 +755,347 @@ class TestSnapshotExpiry:
         # carrier and MUST survive
         assert store.read(spark, "seen", 1) is None
         assert store.read_any(spark, "company_info").count() == 2
+
+
+def _urls_df(spark, urls):
+    return spark.createDataFrame([(u,) for u in urls], "url string")
+
+
+def _foreign_urls(n: int, prefix: str = "base") -> list[str]:
+    return [f"https://elsewhere.example/{prefix}/{i:07d}.txt" for i in range(n)]
+
+
+def _resume_store(spark, root: str, n_frontier: int = 120, n_base: int = 3000):
+    """A store whose v1 holds a canonical frontier and a seen ledger
+    big enough that the next waves append `seen` deltas: `n_base`
+    foreign urls plus the first 10 frontier urls. Returns
+    (store, base urls)."""
+    from edgar_crawler_spark.frontier.canon import canonicalize_url
+
+    frontier = (
+        _frontier_df(spark, n_frontier)
+        .withColumn("url", canonicalize_url("url"))
+        .dropDuplicates(["url"])
+    )
+    preseen = sorted(r.url for r in frontier.select("url").collect())[:10]
+    base = _foreign_urls(n_base) + preseen
+    store = SnapshotStore(root)
+    store.commit(
+        {"frontier": frontier, "seen": _urls_df(spark, base)},
+        summary={"stage": "seed"},
+    )
+    return store, set(base)
+
+
+def _resume_job(spark, store, **kw):
+    return CrawlJob(
+        spark, store, n_buckets=4, wave_size=10,
+        transport_factory=lambda: SimulatedTransport(transient_pct=0, **kw),
+    )
+
+
+def _seen_urls(spark, store, version=None) -> list[str]:
+    return [r.url for r in store.read(spark, "seen", version).collect()]
+
+
+def _count_builds(monkeypatch) -> list:
+    """Record each `build_sharded_bloom` call the crawler makes."""
+    from edgar_crawler_spark.frontier import crawler
+
+    calls = []
+    real = crawler.build_sharded_bloom
+
+    def spy(*args, **kwargs):
+        calls.append((args, kwargs))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(crawler, "build_sharded_bloom", spy)
+    return calls
+
+
+class TestSeenDeltaLog:
+    def test_waves_append_deltas(self, spark, tmp_path):
+        """Over a big base, each wave commits its fetched urls as a
+        `seen` delta on the previous version, and the logical table
+        is base ∪ fetched with no duplicate."""
+        store, base = _resume_store(spark, str(tmp_path / "d1"))
+        job = _resume_job(spark, store)
+        res = job.run(max_waves=3)
+        assert res.waves_run == 3
+        for v in res.versions:
+            assert store.manifest(v)["deltas"] == {"seen": v - 1}
+        assert store.chain("seen", res.versions[-1]) == [1, *res.versions]
+        fetched = {r.url for r in job.pages().select("url").collect()}
+        assert len(fetched) == res.n_fetched + res.n_failed
+        seen = _seen_urls(spark, store)
+        assert len(seen) == len(set(seen))
+        assert set(seen) == base | fetched
+
+    def test_read_is_one_scan(self, spark, tmp_path):
+        """The logical read resolves base + deltas as one multi-path
+        parquet scan, never a Union of per-version reads."""
+        store = SnapshotStore(str(tmp_path / "d2"))
+        store.commit({"seen": _urls_df(spark, _foreign_urls(2000))})
+        for i in range(3):
+            store.commit({}, deltas={"seen": _urls_df(spark, _foreign_urls(5, f"d{i}"))})
+        assert store.chain("seen", 4) == [1, 2, 3, 4]
+        df = store.read(spark, "seen")
+        assert df.count() == 2015
+        plan = df._jdf.queryExecution().executedPlan()
+        assert _nodes(plan, "Union") == []
+        scans = _nodes(plan, "Scan")
+        assert len(scans) == 1
+        assert scans[0].relation().location().rootPaths().size() == 4
+
+    def test_compaction_follows_size_rule(self, spark, tmp_path):
+        """A delta commit extends the chain while the deltas since the
+        base hold fewer bytes than the base, and writes a full copy
+        once they reach it."""
+        store = SnapshotStore(str(tmp_path / "d3"))
+        urls = _foreign_urls(200)
+        store.commit({"seen": _urls_df(spark, urls)})
+        kinds = []
+        for i in range(12):
+            chain = store.chain("seen", store.latest())
+            sizes = [store.manifest(v)["bytes"]["seen"] for v in chain]
+            batch = _foreign_urls(60, f"d{i}")
+            urls += batch
+            v = store.commit({}, deltas={"seen": _urls_df(spark, batch)})
+            appended = store.manifest(v)["deltas"] == {"seen": v - 1}
+            assert appended == (sum(sizes[1:]) < sizes[0])
+            kinds.append(appended)
+        assert True in kinds and False in kinds
+        seen = _seen_urls(spark, store)
+        assert sorted(seen) == sorted(urls)
+
+    def test_chain_stays_bounded(self, spark, tmp_path):
+        """Tiny deltas on a big base never reach its bytes, so the
+        chain is cut at Spark's parallel-listing threshold instead:
+        40 waves never read more than that many paths."""
+        store = SnapshotStore(str(tmp_path / "d4"))
+        limit = int(spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold"))
+        urls = _foreign_urls(20000)
+        store.commit({"seen": _urls_df(spark, urls)})
+        lengths = []
+        for i in range(40):
+            batch = _foreign_urls(1, f"w{i}")
+            urls += batch
+            v = store.commit({}, deltas={"seen": _urls_df(spark, batch)})
+            lengths.append(len(store.chain("seen", v)))
+        assert max(lengths) == limit
+        assert lengths[limit - 1] == 1  # the cut: a full copy
+        seen = _seen_urls(spark, store)
+        assert len(seen) == len(set(seen)) == len(urls)
+
+    def test_expire_keeps_chain_members(self, spark, tmp_path):
+        store = SnapshotStore(str(tmp_path / "d5"))
+        df = _urls_df(spark, ["f"])
+        store.commit({"frontier": df, "seen": _urls_df(spark, _foreign_urls(2000))})
+        for i in range(3):
+            store.commit(
+                {"frontier": df},
+                deltas={"seen": _urls_df(spark, _foreign_urls(5, f"d{i}"))},
+            )
+        expired = store.expire_state(keep_last=1)
+        assert expired == [1, 2, 3]  # their frontier copies
+        for v in (1, 2, 3, 4):
+            assert os.path.isdir(os.path.join(store.root, f"v{v}", "seen"))
+        assert store.read(spark, "frontier", 1) is None
+        assert store.read(spark, "seen").count() == 2015
+        # a full copy cuts the chain: the old members then expire
+        store.commit({"frontier": df, "seen": store.read(spark, "seen")})
+        store.expire_state(keep_last=1)
+        assert store.read(spark, "seen", 4) is None
+        assert store.read(spark, "seen").count() == 2015
+
+
+class TestWaveBloom:
+    def test_built_once_and_no_false_negatives(self, spark, tmp_path, monkeypatch):
+        """The bloom is built once per job, sized for the ledger plus
+        the frontier, then each wave ORs its fetched urls into it: it
+        flags every url of the logical seen. A new job on the same
+        store (a resumed process) builds its own."""
+        builds = _count_builds(monkeypatch)
+        store, base = _resume_store(spark, str(tmp_path / "b1"))
+        job = _resume_job(spark, store)
+        res = job.run(max_waves=3)
+        assert res.waves_run == 3 and len(builds) == 1
+        n_frontier = store.read(spark, "frontier", 1).count()
+        per_shard = -(-(len(base) + n_frontier) // job.bloom_shards)
+        assert builds[0][1]["expected_per_shard"] == per_shard
+        assert job._bloom_version == store.latest()
+        seen = _seen_urls(spark, store)
+        assert job._bloom.might_contain_many(seen).all()
+        _resume_job(spark, store).run(max_waves=1)
+        assert len(builds) == 2
+
+    def test_grown_bloom_filters_like_fresh_build(self, spark, tmp_path):
+        store, _ = _resume_store(spark, str(tmp_path / "b2"))
+        job = _resume_job(spark, store)
+        job.run(max_waves=2)
+        v = store.latest()
+        frontier = store.read(spark, "frontier", 1)  # part of it seen since
+        seen = store.read(spark, "seen", v)
+        grown = job._bloom_for(v, frontier, seen)
+        assert grown is job._bloom
+        fresh = build_sharded_bloom(seen, n_shards=job.bloom_shards)
+
+        def unseen(bloom):
+            return sorted(r.url for r in filter_unseen(frontier, seen, bloom).collect())
+
+        want = sorted(
+            r.url for r in frontier.join(seen, "url", "left_anti").collect()
+        )
+        assert unseen(grown) == unseen(fresh) == want
+        assert 0 < len(want) < frontier.count()
+
+    def test_union_leaves_the_probed_filter_untouched(self):
+        sb = ShardedBloom.from_rows(
+            4, [(s, BloomFilter.empty(100).to_bytes()) for s in range(4)]
+        )
+        before = [bytes(r[1]) for r in sb.to_rows()]
+        grown = sb.union(["a", "b", "c"])
+        assert [bytes(r[1]) for r in sb.to_rows()] == before
+        assert not sb.might_contain_many(["a", "b", "c"]).any()
+        assert grown.might_contain_many(["a", "b", "c"]).all()
+
+    def test_requeue_forces_a_rebuild(self, spark, tmp_path, monkeypatch):
+        """requeue_failed removes urls from seen in a commit the wave
+        loop did not make, so the next wave rebuilds the bloom rather
+        than probe a stale one."""
+        builds = _count_builds(monkeypatch)
+        store, _ = _resume_store(spark, str(tmp_path / "b3"), n_frontier=80)
+        job = CrawlJob(
+            spark, store, n_buckets=2, wave_size=40,
+            transport_factory=lambda: SimulatedTransport(
+                transient_pct=0, permanent_pct=10
+            ),
+        )
+        job.run()
+        assert len(builds) == 1
+        assert job.requeue_failed() > 0
+        res = job.run(max_waves=1)
+        assert res.waves_run == 1 and len(builds) == 2
+
+    def test_sized_for_the_frontier(self, spark, tmp_path, monkeypatch):
+        """A fresh crawl's bloom, built over an empty ledger, has room
+        for the whole frontier: no wave passes its capacity, so it is
+        built once."""
+        builds = _count_builds(monkeypatch)
+        job = CrawlJob(
+            spark, SnapshotStore(str(tmp_path / "b4")), n_buckets=4,
+            wave_size=100, bloom_shards=2,
+            transport_factory=lambda: SimulatedTransport(transient_pct=0),
+        )
+        res = job.run(_frontier_df(spark, 600))
+        assert res.waves_run >= 2 and len(builds) == 1
+        n_frontier = job.store.read(spark, "frontier", 1).count()
+        assert builds[0][1]["expected_per_shard"] == -(-n_frontier // 2) > 64
+        fetched = res.n_fetched + res.n_failed
+        assert job._bloom_room == 2 * builds[0][1]["expected_per_shard"] - fetched
+
+    def test_rebuilt_when_room_runs_out(self, spark, tmp_path, monkeypatch):
+        """The capacity guard: a wave whose urls would pass the room
+        left drops the bloom, and the next wave builds a new one."""
+        builds = _count_builds(monkeypatch)
+        store, _ = _resume_store(spark, str(tmp_path / "b5"))
+        job = _resume_job(spark, store)
+        job.run(max_waves=1)
+        job._bloom_room = 0
+        job.run(max_waves=1)
+        assert job._bloom is None and len(builds) == 1
+        job.run(max_waves=1)
+        assert len(builds) == 2 and job._bloom_version == store.latest()
+
+
+class TestCommitFaults:
+    def test_crash_at_manifest_rename_resumes_exactly(self, spark, tmp_path, monkeypatch):
+        """Kill between a wave's data writes (a seen delta among them)
+        and its manifest rename: the resumed crawl discards the debris
+        and ends with the pages and logical seen of an uninterrupted
+        crawl."""
+        from edgar_crawler_spark.frontier import state
+
+        real_replace = state.os.replace
+        crashed = []
+
+        def replace(src, dst):
+            if dst.endswith("MANIFEST.json") and not crashed:
+                with open(src) as f:
+                    m = json.load(f)
+                if "seen" in m["deltas"] and m["version"] == 3:
+                    crashed.append(os.path.dirname(dst))
+                    raise OSError("killed before the manifest rename")
+            return real_replace(src, dst)
+
+        monkeypatch.setattr(state.os, "replace", replace)
+        store, _ = _resume_store(spark, str(tmp_path / "crash"))
+        with pytest.raises(OSError, match="killed"):
+            _resume_job(spark, store).run()
+        assert crashed and store.latest() == 2
+        debris = [
+            os.path.join(d, f)
+            for d, _, fs in os.walk(crashed[0]) for f in fs if f.endswith(".parquet")
+        ]
+        assert debris
+        monkeypatch.setattr(state.os, "replace", real_replace)
+
+        job = _resume_job(spark, SnapshotStore(store.root))
+        job.run()
+        assert not any(os.path.exists(p) for p in debris)
+
+        oracle_store, _ = _resume_store(spark, str(tmp_path / "oracle"))
+        oracle = _resume_job(spark, oracle_store)
+        oracle.run()
+
+        def pages(j):
+            return sorted(
+                (r.url, r.status, bytes(r.html))
+                for r in j.pages().select("url", "status", "html").collect()
+            )
+
+        assert pages(job) == pages(oracle)
+        got, want = _seen_urls(spark, store), _seen_urls(spark, oracle_store)
+        assert len(got) == len(set(got))
+        assert sorted(got) == sorted(want)
+
+    def test_failed_write_commits_nothing(self, spark, tmp_path):
+        store = SnapshotStore(str(tmp_path / "fw"))
+        store.commit({"seen": _urls_df(spark, ["a"])})
+        bad = spark.range(3).selectExpr("raise_error('write failed') AS x")
+        with pytest.raises(Exception, match="write failed"):
+            store.commit({"frontier": _urls_df(spark, ["b"]), "bad": bad})
+        assert store.latest() == 1
+        assert not os.path.exists(os.path.join(store.root, "v2", "MANIFEST.json"))
+
+
+class TestManifestTelemetry:
+    def test_bytes_and_deltas_cost_no_job(self, spark, tmp_path):
+        """The manifest records each table's bytes on disk and the
+        version a delta extends; the commit runs exactly one Spark job
+        per table, all in the caller's job group."""
+        sc = spark.sparkContext
+        store = SnapshotStore(str(tmp_path / "tm"))
+        store.commit({"seen": _urls_df(spark, _foreign_urls(500))})
+        delta, other = _urls_df(spark, ["x"]), _urls_df(spark, ["y"])
+        sc.setJobGroup("telemetry-commit", "commit")
+        try:
+            v = store.commit({"frontier": other}, deltas={"seen": delta})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("telemetry-commit")) == 2
+        m = store.manifest(v)
+        assert m["deltas"] == {"seen": 1}
+        assert m["tables"] == ["frontier", "seen"]
+        for t in ("frontier", "seen"):
+            d = os.path.join(store.root, f"v{v}", t)
+            on_disk = sum(
+                os.path.getsize(os.path.join(d, f)) for f in os.listdir(d)
+                if f.endswith(".parquet")
+            )
+            assert m["bytes"][t] == on_disk > 0
 
 
 class TestCrawlDelay:
